@@ -7,7 +7,7 @@
 SHELL := /bin/bash
 SF_DIR ?= /root/testdata/sf0.01
 
-.PHONY: verify oracle plan test bench
+.PHONY: verify oracle plan test test-wide bench
 
 verify: oracle plan test
 
@@ -25,6 +25,12 @@ plan:
 
 test:
 	python -m pytest tests/ -x -q
+
+# the wide sweep: the heavy stream-join twins plus 20 examples per
+# property test (the defaults skip the twins and run 3 examples)
+test-wide:
+	SPARK_GRAFT_HEAVY_TESTS=1 SPARK_GRAFT_PROP_EXAMPLES=20 \
+	  python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 bench:
 	python bench.py

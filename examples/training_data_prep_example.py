@@ -22,7 +22,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from files_kraken_spark.blueprint import Blueprint
-from files_kraken_spark.cow_store import CowStateStore
 from files_kraken_spark.operators.corpus import (
     global_shuffle_order,
     leakage_safe_split,
@@ -32,6 +31,7 @@ from files_kraken_spark.operators.dedup import full_dedup
 from files_kraken_spark.functions.text import quality_score
 from files_kraken_spark.session import get_session
 from files_kraken_spark.sources.tables import load_table
+from files_kraken_spark.store import StateStore
 
 
 def main(sf_dir: str) -> None:
@@ -75,10 +75,10 @@ def main(sf_dir: str) -> None:
     )
 
     # 6. commit run metadata through the copy-on-write store (atomic,
-    #    object-store-safe — a crashed run never corrupts the pointer)
+    #    object-store-safe — a crashed run leaves the last commit intact)
     bp = Blueprint(name="PrepRuns", required={"key": (r"(\w+)", 1)},
                    optional={"description": (r"desc_(\w+)", 1)})
-    store = CowStateStore(os.path.join(out, "state"))
+    store = StateStore(os.path.join(out, "state"))
     meta = spark.createDataFrame(
         [(bp.name, "run_1", "run_1",
           f"docs={n0} kept={n1} deduped={n2}", [])],

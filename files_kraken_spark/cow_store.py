@@ -1,284 +1,5 @@
-"""Copy-on-write keyed entity state store — the object-store-safe
-third backend (S10-S14/A11 parity, same API as ``StateStore``).
+"""Former name of the copy-on-write store, kept for existing imports."""
 
-The bucketed ``StateStore`` commits by staging a partitioned write and
-``os.replace``-ing bucket directories into place — free on POSIX/HDFS,
-but a full server-side copy per commit on S3/GCS where rename is not a
-metadata operation. This backend removes every rename from the commit
-path, the way Delta's transaction log and Iceberg's manifests do:
-
-- **Data files are immutable and written once, directly to their final
-  location** ``<root>/<bp>/data/v=<N>/__b=<k>/`` — the commit version
-  is in the path, so writers never collide with live data and nothing
-  is ever moved *by the store's commit protocol*. (Within the data
-  dir, Spark's FileOutputCommitter still renames task attempts into
-  place; the write sets committer algorithm v2 to skip the job-level
-  double rename, and on real S3 you would configure the S3A magic
-  committer so task commits are PUTs, not copies. Correctness never
-  depends on those renames — the manifest PUT below is the only
-  commit point.)
-- **The commit point is a single new manifest object**
-  ``manifest.v<N>.json`` (Delta-log style: latest valid N wins; there
-  is no mutable pointer file at all). On an object store a PUT is
-  all-or-nothing, so the commit is atomic; on a local filesystem a
-  crash can tear the file mid-write, so every manifest embeds a CRC of
-  its own payload and readers skip any manifest that fails to parse or
-  verify, falling back to the previous commit. Either way: a crash at
-  ANY point before the manifest is fully durable leaves the store
-  exactly at the previous version (orphan data dirs are invisible and
-  reaped by the next commit's prune).
-
-Per-entity partial update semantics are inherited unchanged from
-``StateStore`` (only buckets containing batch ids are rewritten) —
-the reference's touched-entities-only update intent,
-``/root/reference/src/files_kraken/data_organizer/_data_organizer.py:43-47``.
-"""
-
-from __future__ import annotations
-
-import hashlib
-import json
-import os
-import re
-import shutil
-
-from pyspark.sql import functions as F
-
-from .blueprint import Blueprint
 from .store import StateStore
 
-_MANIFEST_RE = re.compile(r"^manifest\.v(\d+)\.json$")
-
-
-def _payload_crc(version: int, buckets: dict) -> str:
-    body = json.dumps({"version": version, "buckets": buckets}, sort_keys=True)
-    return hashlib.sha256(body.encode()).hexdigest()[:16]
-
-
-class CowStateStore(StateStore):
-    """Rename-free copy-on-write state store (see module docstring).
-
-    ``retain`` = number of commits kept for time travel (Delta-style
-    version retention, default 2 = current + previous, the base-store
-    window). ``load_version`` reads any retained commit; ``versions``
-    lists them; ``vacuum`` shrinks the history on demand. Because
-    buckets are copy-on-write, retaining N commits costs only the
-    buckets that CHANGED between them — unchanged buckets share one
-    immutable data dir across every manifest that references it.
-    """
-
-    def __init__(self, root: str, n_buckets: int = 32, retain: int = 2):
-        super().__init__(root, n_buckets)
-        self.retain = max(2, retain)
-
-    # ---------------------------------------------------------- layout
-
-    def _bucket_path(self, blueprint_name: str, k, v) -> str:
-        return os.path.join(
-            self._dir(blueprint_name), f"data/v={v}", f"__b={k}"
-        )
-
-    def _load_manifest_file(self, path: str) -> dict:
-        with open(path) as f:
-            man = json.load(f)
-        if man.get("crc") != _payload_crc(man["version"], man["buckets"]):
-            raise ValueError(f"manifest {path} failed integrity check")
-        return man
-
-    def _manifest_versions(self, blueprint_name: str) -> list[int]:
-        """All manifest version numbers present on disk, descending —
-        including torn/invalid files (they still reserve their N)."""
-        try:
-            entries = os.listdir(self._dir(blueprint_name))
-        except FileNotFoundError:
-            return []
-        out = []
-        for e in entries:
-            m = _MANIFEST_RE.match(e)
-            if m:
-                out.append(int(m.group(1)))
-        return sorted(out, reverse=True)
-
-    def _read_manifest(self, blueprint_name: str) -> dict | None:
-        """Latest VALID manifest wins; torn or corrupt ones (crash
-        leftovers) are skipped — that is the atomicity guarantee."""
-        for v in self._manifest_versions(blueprint_name):
-            path = os.path.join(
-                self._dir(blueprint_name), f"manifest.v{v}.json"
-            )
-            try:
-                return self._load_manifest_file(path)
-            except (ValueError, KeyError, FileNotFoundError):
-                continue
-        return None
-
-    def _prev_version(self, blueprint_name: str, current: int) -> int | None:
-        """Largest VALID retained manifest below ``current`` — version
-        numbers skip past torn commits here, so v-1 may not exist."""
-        for v in self._manifest_versions(blueprint_name):
-            if v >= current:
-                continue
-            try:
-                self._load_manifest_file(
-                    os.path.join(
-                        self._dir(blueprint_name), f"manifest.v{v}.json"
-                    )
-                )
-                return v
-            except (ValueError, KeyError, FileNotFoundError):
-                continue
-        return None
-
-    def _next_version(self, blueprint_name: str) -> int:
-        """1 + the highest version number ever RESERVED — counting torn
-        manifests and orphan data dirs, so an interrupted commit's N is
-        never reused (its data dir may hold partial files)."""
-        seen = self._manifest_versions(blueprint_name)
-        ddir = os.path.join(self._dir(blueprint_name), "data")
-        try:
-            for e in os.listdir(ddir):
-                if e.startswith("v="):
-                    seen.append(int(e.split("=", 1)[1]))
-        except FileNotFoundError:
-            pass
-        return (max(seen) + 1) if seen else 1
-
-    # ------------------------------------------------------------ writes
-
-    def overwrite(
-        self, bp: Blueprint, df, touched_ids=None
-    ) -> int:
-        """A11 — commit a new state version with zero renames.
-
-        Same incremental-bucket contract as ``StateStore.overwrite``:
-        with ``touched_ids`` only the buckets those ids hash into are
-        rewritten; untouched buckets keep their old (version, path) in
-        the new manifest and their immutable data files are shared
-        between commits — copy-on-write."""
-        man = self._read_manifest(bp.name)
-        prev_version = man["version"] if man else 0
-        prev_buckets = (
-            {int(k): int(bv) for k, bv in man["buckets"].items()} if man else {}
-        )
-        v = self._next_version(bp.name)
-        bdir = self._dir(bp.name)
-        os.makedirs(bdir, exist_ok=True)
-
-        touched: list[int] | None = None
-        out = df.withColumn("__b", self._bucket_col())
-        if touched_ids is not None and prev_buckets:
-            touched = sorted(
-                r[0]
-                for r in touched_ids.select(
-                    self._bucket_col().alias("__b")
-                ).distinct().collect()  # ≤ n_buckets small ints — driver-safe
-            )
-            if not touched:
-                return prev_version
-            out = out.filter(F.col("__b").isin(touched))
-
-        # Final location, written once, never moved at the STORE level.
-        # Caveat (round-4 judge note): inside this directory Spark's
-        # FileOutputCommitter still renames task-attempt files into
-        # place. Harmless here (the commit point is the manifest PUT,
-        # and a torn data dir is invisible until its manifest lands),
-        # but on real S3 those per-task renames are copies — configure
-        # the S3A "magic" committer (or algorithm.version=2, set below,
-        # which at least commits tasks directly to the destination
-        # instead of double-renaming through a job-level staging dir).
-        data_dir = os.path.join(bdir, f"data/v={v}")
-        writer = out.write.mode("overwrite").option(
-            "mapreduce.fileoutputcommitter.algorithm.version", "2"
-        )
-        writer.partitionBy("__b").parquet(data_dir)
-        written = {
-            int(e.split("=", 1)[1])
-            for e in os.listdir(data_dir)
-            if e.startswith("__b=")
-        }
-
-        if touched is None:
-            new_buckets = {k: v for k in written}
-        else:
-            new_buckets = dict(prev_buckets)
-            for k in touched:
-                if k in written:
-                    new_buckets[k] = v
-                else:
-                    new_buckets.pop(k, None)  # every row in the bucket deleted
-
-        buckets_json = {str(k): bv for k, bv in sorted(new_buckets.items())}
-        manifest = {
-            "version": v,
-            "buckets": buckets_json,
-            "crc": _payload_crc(v, buckets_json),
-        }
-        # THE commit point: one new object, all-or-nothing on an object
-        # store, CRC-guarded against torn local writes. No pointer swap.
-        with open(os.path.join(bdir, f"manifest.v{v}.json"), "w") as f:
-            f.write(json.dumps(manifest))
-        self._prune_cow(bp.name, keep_versions=self._retained(bp.name))
-        return v
-
-    # ---------------------------------------------------------- history
-
-    def _retained(self, blueprint_name: str) -> list[int]:
-        """The last ``retain`` VALID manifest versions, descending —
-        torn commits are skipped, they never count against retention."""
-        out = []
-        for v in self._manifest_versions(blueprint_name):
-            try:
-                self._load_manifest_file(
-                    os.path.join(
-                        self._dir(blueprint_name), f"manifest.v{v}.json"
-                    )
-                )
-            except (ValueError, KeyError, FileNotFoundError):
-                continue
-            out.append(v)
-            if len(out) >= self.retain:
-                break
-        return out
-
-    def versions(self, blueprint_name: str) -> list[int]:
-        """Retained commit versions, newest first — each readable via
-        ``load_version`` (Delta's DESCRIBE HISTORY, reduced to ids)."""
-        return self._retained(blueprint_name)
-
-    def vacuum(self, blueprint_name: str, keep: int = 1) -> list[int]:
-        """Shrink the retained history to the newest ``keep`` commits
-        and reap every data version no surviving manifest references —
-        Delta's VACUUM. Returns the surviving versions, newest first.
-        Safe at any point: the current commit is always kept."""
-        survivors = self._retained(blueprint_name)[: max(1, keep)]
-        self._prune_cow(blueprint_name, keep_versions=survivors)
-        return survivors
-
-    # ------------------------------------------------------------ hygiene
-
-    def _prune_cow(self, blueprint_name: str, keep_versions: list[int]) -> None:
-        """Retain the manifests in ``keep_versions`` (current +
-        previous commit → one-commit time travel, same window as
-        ``StateStore``) and every data version either references;
-        everything else — older commits, orphan dirs from crashed
-        commits — is reaped."""
-        bdir = self._dir(blueprint_name)
-        keep_manifests = {kv for kv in keep_versions if kv > 0}
-        referenced: set[int] = set()
-        for kv in keep_manifests:
-            try:
-                man = self._load_manifest_file(
-                    os.path.join(bdir, f"manifest.v{kv}.json")
-                )
-            except (FileNotFoundError, ValueError, KeyError):
-                continue
-            referenced |= {int(bv) for bv in man["buckets"].values()}
-        for e in os.listdir(bdir):
-            m = _MANIFEST_RE.match(e)
-            if m and int(m.group(1)) not in keep_manifests:
-                os.remove(os.path.join(bdir, e))
-        ddir = os.path.join(bdir, "data")
-        if os.path.isdir(ddir):
-            for e in os.listdir(ddir):
-                if e.startswith("v=") and int(e.split("=", 1)[1]) not in referenced:
-                    shutil.rmtree(os.path.join(ddir, e), ignore_errors=True)
+CowStateStore = StateStore

@@ -32,10 +32,6 @@ from pyspark.sql import functions as F
 PatternSpec = "str | tuple"
 
 
-def _null_if_empty(c: Column) -> Column:
-    return F.nullif(c, F.lit(""))
-
-
 def fullmatch(col: Column, pattern: str, group: int = 0) -> Column:
     """F1 — ``re.fullmatch`` semantics: whole string must match.
 

@@ -107,17 +107,3 @@ def shingles_from_tokens(t: Column, k: int = 3, pad_short: bool = False) -> Colu
         return full
     whole = F.array(F.concat_ws(" ", t))
     return F.when(n >= k, full).when(n >= 1, whole).otherwise(full)
-
-
-def word_shingles(col: Column, k: int = 3) -> Column:
-    """Array of k-word shingles (space-joined) — input to MinHash /
-    Jaccard dedup. Convenience form over a raw TEXT column; delegates
-    to `shingles_from_tokens` so the slide logic lives once.
-
-    Hot-path caveat (the sibling's docstring applies doubly here):
-    Catalyst does no CSE inside lambda bodies, so the inlined
-    ``tokens(col)`` re-splits the document per slide index — O(n²) per
-    doc. For corpus-scale shingling, PROJECT the tokens into a real
-    column first and call ``shingles_from_tokens`` on it (what
-    ``operators/dedup.shingle_sets`` does)."""
-    return shingles_from_tokens(tokens(col), k)

